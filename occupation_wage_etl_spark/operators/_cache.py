@@ -16,8 +16,12 @@ while the persisted RDD lives on in the JVM), which is exactly the
 silent leak this module exists to prevent.  Driver-side DataFrame
 wrappers are a few hundred bytes each, so holding them costs nothing.
 
-Contract for library callers (composing operators OUTSIDE bench.py /
-tools/oracle_check.py, which both release per query):
+Contract for harness loops (bench.py and the tools/ scripts): call
+:func:`release_all` after each query's terminal action.  It drops the
+tracked persists, the iterative operators' checkpoints and Spark's SQL
+cache, so no query reads another one's cached blocks.
+
+Contract for library callers (composing operators outside such a loop):
 
 - wrap each unit of work in :func:`cached_scope` —
 
@@ -88,6 +92,7 @@ def cached_scope():
             except Exception:
                 pass
 
+
 def release_checkpoints(spark) -> int:
     """Unpersist ALL persistent RDDs left in the session — the
     ``localCheckpoint`` blocks written by the iterative operators
@@ -98,10 +103,18 @@ def release_checkpoints(spark) -> int:
     live would make the frame unrecomputable).
 
     HARNESS-LOOP ONLY: call between queries, when no operator output is
-    still to be consumed — bench.py and tools/oracle_check.py do this
-    per query.  Returns the number of RDDs unpersisted."""
+    still to be consumed (:func:`release_all` does).  Returns the number
+    of RDDs unpersisted."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     n = int(jmap.size())
     for rdd in jmap.values():
         rdd.unpersist()
     return n
+
+
+def release_all(spark) -> None:
+    """The harness release step between two queries: tracked persists,
+    then iterative checkpoints, then the SQL cache."""
+    release_cached()
+    release_checkpoints(spark)
+    spark.catalog.clearCache()

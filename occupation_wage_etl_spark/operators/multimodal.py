@@ -11,7 +11,7 @@ time and the JVM⇄Python boundary is columnar.  The ops here are:
   the latter four delegate to ``operators/video.py`` / ``operators/
   audio.py``) in pure Python — no media libraries, fully deterministic;
   corrupt headers degrade to mime-only, never raise.
-- ``decode_image`` (``mode="real"``) — REAL decode for PNG (zlib
+- ``decode_image`` — REAL decode for PNG (zlib
   inflate + scanline unfilter, 8-bit gray/RGB/±alpha), BMP (24/32-bit
   uncompressed), and baseline-DCT JPEG (SOF0/SOF1 Huffman: marker
   parse, canonical-Huffman entropy decode, dequantize, exact int64
@@ -20,21 +20,18 @@ time and the JVM⇄Python boundary is columnar.  The ops here are:
   thumb.  Progressive JPEG (SOF2, T.81 Annex G — DC/AC successive
   approximation, spectral selection, EOB runs, restarts) is decoded by
   the same path, gray and interleaved color; 4:2:0 YCbCr → fixed-point
-  RGB reconstruction is also real.  ``mode="strict"`` raises for any
-  undecodable payload, ``mode="fake"`` keeps the md5-keystream fake for
-  plumbing tests.
+  RGB reconstruction is also real.  Undecodable payloads raise.
 - ``decode_audio_stats`` — REAL WAV/PCM16 decode (stdlib ``struct``):
   per-asset sample stats without materializing waveforms into the plan.
 - ``resize_image`` / ``sample_frames`` — resize has the same real path
-  as decode; ``sample_frames(mode="mp4")`` does REAL ISO-BMFF container
-  demux (``operators/video.py``: stsc/stco/stsz offset math, stss
-  keyframe slices) and returns per-sample payload slices.  Since round
+  as decode; ``sample_frames`` does REAL ISO-BMFF container demux
+  (``operators/video.py``: stsc/stco/stsz offset math, stss keyframe
+  slices) and returns per-sample payload slices.  Since round
   8, ``operators/h264.py`` REALLY decodes the pixels of IDR INTRA
   keyframes (CAVLC entropy, I_PCM + Intra_16x16, §8.5 integer
   transforms, all §8.3.3/8.3.4 prediction modes) — the remaining
   stub is narrowed to inter (P/B) frames, CABAC streams and I_NxN
-  spatial prediction (no ffmpeg); ``fake`` exercises the fan-out
-  plumbing.
+  spatial prediction (no ffmpeg).
 - ``extract_features`` — content-derived features, library-free.
 
 Partitioning: media rows are wildly skewed by payload size, so every
@@ -392,61 +389,28 @@ _STUB_MSG = (
     "baseline+progressive-JPEG images, WAV/PCM16 audio, H.264 IDR "
     "intra keyframes — I_PCM/Intra_16x16/Intra_4x4 CAVLC — via "
     "operators/h264.decode_avc_keyframes); INTER (P/B) video frames "
-    "and CABAC streams require an ffmpeg-class codec — pass "
-    "mode='fake' for the deterministic test fake, mode='mp4' on "
-    "sample_frames for the real ISO-BMFF container demux "
-    "(operators/video.py), or swap the per-batch body for a "
-    "codec-library decoder"
+    "and CABAC streams require an ffmpeg-class codec — swap the "
+    "per-batch body for a codec-library decoder"
 )
-
-
-def _fake_pixels(b: bytes, n: int) -> list[int]:
-    """Deterministic fake 'decoded pixels': md5-keystream over the payload.
-    Clearly NOT real decoding — exists so downstream plumbing is testable."""
-    out: list[int] = []
-    seed = b or b""
-    counter = 0
-    while len(out) < n:
-        out.extend(hashlib.md5(seed + counter.to_bytes(4, "big")).digest())
-        counter += 1
-    return out[:n]
 
 
 def decode_image(
     df: DataFrame,
     bin_col: str = "content",
     id_col: str = "doc_id",
-    mode: str = "real",
     thumb: int = 8,
     partitions: int | None = None,
 ) -> DataFrame:
     """(id, width, height, pixels array<int>) — decode to a ``thumb``²
     grayscale raster (width/height report the SOURCE dimensions).
 
-    ``mode='real'``: stdlib PNG/BMP decode + nearest-neighbor resample;
-    undecodable payloads (JPEG, video, garbage) raise — curate/filter by
-    ``sniff_metadata`` mime first.  ``mode='fake'``: md5-keystream pixels
-    for plumbing tests.  ``mode='strict'`` is a legacy alias that always
-    raises (kept so callers can assert the no-codec-library posture)."""
-    if mode not in ("real", "strict", "fake"):
-        raise ValueError("mode must be 'real', 'strict' or 'fake'")
+    Built-in PNG/BMP/JPEG decode + nearest-neighbor resample;
+    undecodable payloads (video, garbage) raise — curate/filter by
+    ``sniff_metadata`` mime first."""
     out_schema = f"{id_col} long, width int, height int, pixels array<int>"
-    n_px = thumb * thumb
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if mode == "strict":
-                raise NotImplementedError(_STUB_MSG)
-            if mode == "fake":
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col].to_numpy(),
-                        "width": thumb,
-                        "height": thumb,
-                        "pixels": [_fake_pixels(b, n_px) for b in pdf[bin_col]],
-                    }
-                )
-                continue
             widths, heights, pixels = [], [], []
             for b in pdf[bin_col]:
                 w, h, gray = decode_image_bytes(bytes(b or b""))
@@ -540,32 +504,15 @@ def resize_image(
     target_h: int,
     bin_col: str = "content",
     id_col: str = "doc_id",
-    mode: str = "real",
     partitions: int | None = None,
 ) -> DataFrame:
     """(id, width, height, content binary) — resized grayscale payload,
-    re-encoded as PNG.  ``mode='real'``: stdlib PNG/BMP decode →
-    nearest-neighbor resample → ``encode_png_gray``; 'fake' emits an
-    md5-keystream payload of target_w*target_h bytes; 'strict' raises."""
-    if mode not in ("real", "strict", "fake"):
-        raise ValueError("mode must be 'real', 'strict' or 'fake'")
+    re-encoded as PNG: built-in image decode → nearest-neighbor
+    resample → ``encode_png_gray``."""
     out_schema = f"{id_col} long, width int, height int, content binary"
-    n = target_w * target_h
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if mode == "strict":
-                raise NotImplementedError(_STUB_MSG)
-            if mode == "fake":
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col].to_numpy(),
-                        "width": target_w,
-                        "height": target_h,
-                        "content": [bytes(_fake_pixels(b, n)) for b in pdf[bin_col]],
-                    }
-                )
-                continue
             out = []
             for b in pdf[bin_col]:
                 w, h, gray = decode_image_bytes(bytes(b or b""))
@@ -592,55 +539,27 @@ def sample_frames(
     max_frames: int = 4,
     bin_col: str = "content",
     id_col: str = "doc_id",
-    mode: str = "strict",
-    partitions: int | None = None,
 ) -> DataFrame:
     """One output row per sampled frame: (id, frame_idx, frame binary).
-    A fan-out mapInPandas (rows out > rows in) — the Spark-native shape
-    for frame extraction.
+    A fan-out (rows out > rows in) — the Spark-native shape for frame
+    extraction.
 
-    ``mode='mp4'`` (since round 7): REAL container demux for ISO-BMFF
-    payloads — ``frame_idx`` is the 1-based sync-sample number from the
-    ``stss`` table and ``frame`` is the actual ``mdat`` byte slice at
-    the stsc/stco/stsz-derived offset (:mod:`.video`); ``every_nth``
-    strides the keyframe list, ``max_frames`` caps the fan-out.  Codec
-    DECODE of the sliced frames remains the PERMANENT STUB (stdlib has
-    no H.264-class decoder — COVERAGE.md records the decision); 'fake'
-    emits md5-derived 16-byte frame payloads at indexes 0, n, 2n, … so
-    non-MP4 plumbing stays tested, and 'strict' raises."""
-    if mode == "mp4":
-        from occupation_wage_etl_spark.operators.video import (
-            mp4_keyframe_slices,
-        )
+    REAL container demux for ISO-BMFF payloads — ``frame_idx`` is the
+    1-based sync-sample number from the ``stss`` table and ``frame`` is
+    the actual ``mdat`` byte slice at the stsc/stco/stsz-derived offset
+    (:mod:`.video`); ``every_nth`` strides the keyframe list,
+    ``max_frames`` caps the fan-out.  Inter-frame codec DECODE of the
+    sliced frames remains out of scope (COVERAGE.md records the
+    decision)."""
+    from occupation_wage_etl_spark.operators.video import mp4_keyframe_slices
 
-        return mp4_keyframe_slices(
-            df, every_nth=every_nth, max_frames=max_frames,
-            bin_col=bin_col, id_col=id_col,
-        ).select(
-            id_col,
-            F.col("sample_idx").cast("int").alias("frame_idx"),
-            "frame",
-        )
-    out_schema = f"{id_col} long, frame_idx int, frame binary"
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if mode == "strict":
-                raise NotImplementedError(_STUB_MSG)
-            ids, idxs, frames = [], [], []
-            for rid, b in zip(pdf[id_col], pdf[bin_col]):
-                for j in range(max_frames):
-                    fi = j * every_nth
-                    ids.append(rid)
-                    idxs.append(fi)
-                    frames.append(
-                        hashlib.md5((b or b"") + fi.to_bytes(4, "big")).digest()
-                    )
-            yield pd.DataFrame({id_col: ids, "frame_idx": idxs, "frame": frames})
-
-    return (
-        _maybe_rebalance(df.select(id_col, bin_col), partitions)
-        .mapInPandas(_sample, schema=out_schema)
+    return mp4_keyframe_slices(
+        df, every_nth=every_nth, max_frames=max_frames,
+        bin_col=bin_col, id_col=id_col,
+    ).select(
+        id_col,
+        F.col("sample_idx").cast("int").alias("frame_idx"),
+        "frame",
     )
 
 

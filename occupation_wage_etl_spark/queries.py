@@ -1,7 +1,11 @@
 """Query registry: every operator from SURVEY.md §2 + the training-data
 extension operators, as (PySpark builder, DuckDB oracle SQL) pairs.
 
-Cross-engine determinism rules (validated in tests/test_oracle_parity.py):
+Every query must match its oracle BIT-EXACTLY: both outputs are compared
+after sorting columns by name and rows by value, with floats rendered by
+``repr`` (``tools/oracle_check._value_hash``, the one comparator that
+tests/test_oracle_parity.py and tools/oracle_check.py both use).
+Cross-engine determinism rules that make this hold:
 
 - **Averages/sums of 2-decimal data** use the exact-decimal trick:
   ``CAST(sum(CAST(x AS DECIMAL(18,2))) AS DOUBLE)`` — decimal sums are
@@ -86,6 +90,13 @@ from occupation_wage_etl_spark.operators import (
     video,
     vocab,
 )
+
+
+# The source tables every query reads, one parquet drop each under sf_dir.
+TABLES = [
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+]
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -2156,7 +2167,7 @@ def _synth_png(docs: DataFrame) -> DataFrame:
 
 def q50_decode_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    decoded = multimodal.decode_image(_synth_png(docs), mode="real", thumb=8)
+    decoded = multimodal.decode_image(_synth_png(docs), thumb=8)
     px = F.col("pixels")
     return decoded.select(
         "doc_id",
@@ -11024,7 +11035,7 @@ def _synth_jpeg(docs: DataFrame) -> DataFrame:
 
 def q217_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    decoded = multimodal.decode_image(_synth_jpeg(docs), mode="real", thumb=8)
+    decoded = multimodal.decode_image(_synth_jpeg(docs), thumb=8)
     px = F.col("pixels")
     return decoded.select(
         "doc_id",
@@ -11745,9 +11756,7 @@ def _synth_jpeg_prog(docs: DataFrame) -> DataFrame:
 
 def q240_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    decoded = multimodal.decode_image(
-        _synth_jpeg_prog(docs), mode="real", thumb=8
-    )
+    decoded = multimodal.decode_image(_synth_jpeg_prog(docs), thumb=8)
     px = F.col("pixels")
     return decoded.select(
         "doc_id",
@@ -14514,9 +14523,7 @@ def _synth_png9(docs: DataFrame) -> DataFrame:
 
 def q278_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    decoded = multimodal.decode_image(
-        _synth_png9(docs), mode="real", thumb=9
-    )
+    decoded = multimodal.decode_image(_synth_png9(docs), thumb=9)
     h = multimodal.dhash64(F.col("pixels"), grid=9)
     return decoded.select(
         "doc_id",
@@ -14605,9 +14612,7 @@ def q279_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").filter(
         F.col("doc_id") < IMG_PLANT_N
     )
-    decoded = multimodal.decode_image(
-        _synth_png9_groups(docs), mode="real", thumb=9
-    )
+    decoded = multimodal.decode_image(_synth_png9_groups(docs), thumb=9)
     # Both sides of the band self-join consume the fingerprints; the
     # upstream here is the Arrow-batched PNG decode, which the uncached
     # plan re-executes once per side (8 Python nodes measured).
@@ -17625,321 +17630,6 @@ FROM ranked
 """
 
 
-SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q01_pricing_summary": q01_pricing_summary,
-    "q02_top_parts_by_avg_price": q02_top_parts_by_avg_price,
-    "q03_prefix_join": q03_prefix_join,
-    "q04_avg_by_prefix": q04_avg_by_prefix,
-    "q05_cleaning_grammar": q05_cleaning_grammar,
-    "q06_month_parse": q06_month_parse,
-    "q07_filter_projection": q07_filter_projection,
-    "q08_top3_orders_per_priority": q08_top3_orders_per_priority,
-    "q09_customers_without_orders": q09_customers_without_orders,
-    "q10_sessionize": q10_sessionize,
-    "q11_windowed_counts": q11_windowed_counts,
-    "q12_dedup_stats": q12_dedup_stats,
-    "q13_minhash_lsh_pairs": q13_minhash_lsh_pairs,
-    "q14_ngram_jaccard_pairs": q14_ngram_jaccard_pairs,
-    "q15_knn_cosine": q15_knn_cosine,
-    "q16_token_stats": q16_token_stats,
-    "q17_quality_scores": q17_quality_scores,
-    "q18_lang_id": q18_lang_id,
-    "q19_fingerprints": q19_fingerprints,
-    "q20_rolling_overlap": q20_rolling_overlap,
-    "q21_embedding_near_dup": q21_embedding_near_dup,
-    "q22_simhash_pairs": q22_simhash_pairs,
-    "q23_lsh_knn": q23_lsh_knn,
-    "q24_ivf_knn": q24_ivf_knn,
-    "q25_multimodal_sniff": q25_multimodal_sniff,
-    "q26_multimodal_features": q26_multimodal_features,
-    "q27_asof_join": q27_asof_join,
-    "q28_time_rollup": q28_time_rollup,
-    "q29_json_props": q29_json_props,
-    "q30_sql_view_cte": q30_sql_view_cte,
-    "q31_set_ops": q31_set_ops,
-    "q32_running_totals": q32_running_totals,
-    "q33_price_distribution": q33_price_distribution,
-    "q34_curate_corpus": q34_curate_corpus,
-    "q35_train_split": q35_train_split,
-    "q36_pii_redaction": q36_pii_redaction,
-    "q37_chunk_documents": q37_chunk_documents,
-    "q38_vocab": q38_vocab,
-    "q39_dup_clusters": q39_dup_clusters,
-    "q40_pack_sequences": q40_pack_sequences,
-    "q41_embedding_centroids": q41_embedding_centroids,
-    "q42_tfidf_top_tokens": q42_tfidf_top_tokens,
-    "q43_region_rollup": q43_region_rollup,
-    "q44_price_band_join": q44_price_band_join,
-    "q45_returns_pivot": q45_returns_pivot,
-    "q46_measure_melt": q46_measure_melt,
-    "q47_profile_lineitem": q47_profile_lineitem,
-    "q48_status_cube": q48_status_cube,
-    "q49_stat_aggregates": q49_stat_aggregates,
-    "q50_decode_image": q50_decode_image,
-    "q51_audio_stats": q51_audio_stats,
-    "q52_decontaminate": q52_decontaminate,
-    "q53_repetition_quality": q53_repetition_quality,
-    "q54_domain_caps": q54_domain_caps,
-    "q55_bm25_topk": q55_bm25_topk,
-    "q56_bigram_familiarity": q56_bigram_familiarity,
-    "q57_pq_adc_knn": q57_pq_adc_knn,
-    "q58_snapshot_diff": q58_snapshot_diff,
-    "q59_encode_corpus": q59_encode_corpus,
-    "q60_sample_to_budget": q60_sample_to_budget,
-    "q61_trailing_window": q61_trailing_window,
-    "q62_key_skew": q62_key_skew,
-    "q63_quality_classifier": q63_quality_classifier,
-    "q64_training_batches": q64_training_batches,
-    "q65_snapshot_drift": q65_snapshot_drift,
-    "q66_contrastive_pairs": q66_contrastive_pairs,
-    "q67_funnel": q67_funnel,
-    "q68_cohort_retention": q68_cohort_retention,
-    "q69_substring_dup_spans": q69_substring_dup_spans,
-    "q70_semantic_dedup": q70_semantic_dedup,
-    "q71_incremental_agg": q71_incremental_agg,
-    "q72_fuzzy_join": q72_fuzzy_join,
-    "q73_interval_overlap": q73_interval_overlap,
-    "q74_equi_depth_hist": q74_equi_depth_hist,
-    "q75_resample_ffill": q75_resample_ffill,
-    "q76_phrase_search": q76_phrase_search,
-    "q77_shipping_priority": q77_shipping_priority,
-    "q78_local_supplier_volume": q78_local_supplier_volume,
-    "q79_returned_items": q79_returned_items,
-    "q80_triangles": q80_triangles,
-    "q81_zscore_normalize": q81_zscore_normalize,
-    "q82_scd2_history": q82_scd2_history,
-    "q83_activity_streaks": q83_activity_streaks,
-    "q84_event_transitions": q84_event_transitions,
-    "q85_weighted_sample": q85_weighted_sample,
-    "q86_big_orders": q86_big_orders,
-    "q87_sole_return_supplier": q87_sole_return_supplier,
-    "q88_winsorize": q88_winsorize,
-    "q89_rolling_anomalies": q89_rolling_anomalies,
-    "q90_char_entropy": q90_char_entropy,
-    "q91_bucketize": q91_bucketize,
-    "q92_pagerank": q92_pagerank,
-    "q93_cooccurrence": q93_cooccurrence,
-    "q94_mad_outliers": q94_mad_outliers,
-    "q95_benford": q95_benford,
-    "q96_rrf_hybrid": q96_rrf_hybrid,
-    "q97_constraints": q97_constraints,
-    "q98_user_mode": q98_user_mode,
-    "q99_skyline": q99_skyline,
-    "q100_mutual_match": q100_mutual_match,
-    "q101_incremental_dedup": q101_incremental_dedup,
-    "q102_attribution": q102_attribution,
-    "q103_lang_bigrams": q103_lang_bigrams,
-    "q104_ewma": q104_ewma,
-    "q105_score_calibration": q105_score_calibration,
-    "q106_dup_ngram_coverage": q106_dup_ngram_coverage,
-    "q107_vocab_novelty": q107_vocab_novelty,
-    "q108_trend_ols": q108_trend_ols,
-    "q109_cluster_reps": q109_cluster_reps,
-    "q110_twa": q110_twa,
-    "q111_session_paths": q111_session_paths,
-    "q112_rfm": q112_rfm,
-    "q113_cusum": q113_cusum,
-    "q114_weighted_median": q114_weighted_median,
-    "q115_leak_safe_split": q115_leak_safe_split,
-    "q116_late_shipments": q116_late_shipments,
-    "q117_promo_revenue": q117_promo_revenue,
-    "q118_small_quantity_revenue": q118_small_quantity_revenue,
-    "q119_disjunctive_revenue": q119_disjunctive_revenue,
-    "q120_rich_inactive_customers": q120_rich_inactive_customers,
-    "q121_denoising_pairs": q121_denoising_pairs,
-    "q122_temperature_mix": q122_temperature_mix,
-    "q123_containment_pairs": q123_containment_pairs,
-    "q124_dedup_eval": q124_dedup_eval,
-    "q125_windowed_funnel": q125_windowed_funnel,
-    "q126_out_of_order": q126_out_of_order,
-    "q127_int8_quantize": q127_int8_quantize,
-    "q128_compaction_plan": q128_compaction_plan,
-    "q129_exists_late_orders": q129_exists_late_orders,
-    "q130_rollup": q130_rollup,
-    "q131_ab_test": q131_ab_test,
-    "q132_gini": q132_gini,
-    "q133_ri_audit": q133_ri_audit,
-    "q134_mutual_info": q134_mutual_info,
-    "q135_resample_lerp": q135_resample_lerp,
-    "q136_heavy_hitters": q136_heavy_hitters,
-    "q137_event_dedup": q137_event_dedup,
-    "q138_user_totals": q138_user_totals,
-    "q139_k_core": q139_k_core,
-    "q140_stratified_exact": q140_stratified_exact,
-    "q141_record_linkage": q141_record_linkage,
-    "q142_survival": q142_survival,
-    "q143_winnowing_pairs": q143_winnowing_pairs,
-    "q144_bpe_merges": q144_bpe_merges,
-    "q145_roc_auc": q145_roc_auc,
-    "q146_calibration": q146_calibration,
-    "q147_js_divergence": q147_js_divergence,
-    "q148_psi": q148_psi,
-    "q149_mmr_rerank": q149_mmr_rerank,
-    "q150_ndcg": q150_ndcg,
-    "q151_entity_resolution": q151_entity_resolution,
-    "q152_ngram_prefix_pairs": q152_ngram_prefix_pairs,
-    "q153_average_precision": q153_average_precision,
-    "q154_confusion": q154_confusion,
-    "q155_cohens_kappa": q155_cohens_kappa,
-    "q156_gini_tokens": q156_gini_tokens,
-    "q157_chao1": q157_chao1,
-    "q158_zipf_fit": q158_zipf_fit,
-    "q159_hll_distinct": q159_hll_distinct,
-    "q160_cms_heavy": q160_cms_heavy,
-    "q161_cross_entropy": q161_cross_entropy,
-    "q162_repetition": q162_repetition,
-    "q163_bpe_encode": q163_bpe_encode,
-    "q164_brier": q164_brier,
-    "q165_ece": q165_ece,
-    "q166_spearman": q166_spearman,
-    "q167_ks_test": q167_ks_test,
-    "q168_chi_square": q168_chi_square,
-    "q169_welch_t": q169_welch_t,
-    "q170_kruskal_wallis": q170_kruskal_wallis,
-    "q171_acf": q171_acf,
-    "q172_adamic_adar": q172_adamic_adar,
-    "q173_label_prop": q173_label_prop,
-    "q174_mrr_recall": q174_mrr_recall,
-    "q175_fleiss_kappa": q175_fleiss_kappa,
-    "q176_mcnemar": q176_mcnemar,
-    "q177_epoch_batches": q177_epoch_batches,
-    "q178_curriculum": q178_curriculum,
-    "q179_cov_matrix": q179_cov_matrix,
-    "q180_multi_ols": q180_multi_ols,
-    "q181_target_encode": q181_target_encode,
-    "q182_kfold_encode": q182_kfold_encode,
-    "q183_volume_shipping": q183_volume_shipping,
-    "q184_market_share": q184_market_share,
-    "q185_theta_overlap": q185_theta_overlap,
-    "q186_seasonal": q186_seasonal,
-    "q187_bootstrap_ci": q187_bootstrap_ci,
-    "q188_train_logreg": q188_train_logreg,
-    "q189_best_threshold": q189_best_threshold,
-    "q190_bfs_hops": q190_bfs_hops,
-    "q191_golden_records": q191_golden_records,
-    "q192_assoc_rules": q192_assoc_rules,
-    "q193_item_cf": q193_item_cf,
-    "q194_clustering_coeff": q194_clustering_coeff,
-    "q195_stump": q195_stump,
-    "q196_min_cost_supplier": q196_min_cost_supplier,
-    "q197_product_profit": q197_product_profit,
-    "q198_important_parts": q198_important_parts,
-    "q199_order_count_distribution": q199_order_count_distribution,
-    "q200_top_supplier": q200_top_supplier,
-    "q201_supplier_part_counts": q201_supplier_part_counts,
-    "q202_dominant_suppliers": q202_dominant_suppliers,
-    "q203_sorted_neighborhood": q203_sorted_neighborhood,
-    "q204_personalized_pagerank": q204_personalized_pagerank,
-    "q205_seasonal_even": q205_seasonal_even,
-    "q206_hits": q206_hits,
-    "q207_assortativity": q207_assortativity,
-    "q208_record_days": q208_record_days,
-    "q209_pmi": q209_pmi,
-    "q210_mixing_weights": q210_mixing_weights,
-    "q211_pca_top_component": q211_pca_top_component,
-    "q212_isotonic": q212_isotonic,
-    "q213_woe_iv": q213_woe_iv,
-    "q214_kmeans": q214_kmeans,
-    "q215_value_percentiles_fg": q215_value_percentiles_fg,
-    "q216_quantile_sketch": q216_quantile_sketch,
-    "q217_jpeg_decode": q217_jpeg_decode,
-    "q218_grouped_hll": q218_grouped_hll,
-    "q219_theil_sen": q219_theil_sen,
-    "q220_readability": q220_readability,
-    "q221_conformal": q221_conformal,
-    "q222_bh_fdr": q222_bh_fdr,
-    "q223_kneser_ney": q223_kneser_ney,
-    "q224_jaro_winkler": q224_jaro_winkler,
-    "q225_sequential_pairs": q225_sequential_pairs,
-    "q226_bcubed": q226_bcubed,
-    "q227_stratified_ate": q227_stratified_ate,
-    "q228_wasserstein": q228_wasserstein,
-    "q229_logo_ols": q229_logo_ols,
-    "q230_forecast_backtest": q230_forecast_backtest,
-    "q231_cross_correlation": q231_cross_correlation,
-    "q232_mp4_demux": q232_mp4_demux,
-    "q233_mp4_keyframes": q233_mp4_keyframes,
-    "q234_jpeg_rgb": q234_jpeg_rgb,
-    "q235_near_dup_recall": q235_near_dup_recall,
-    "q236_lsh_knn_recall": q236_lsh_knn_recall,
-    "q237_snb_recall": q237_snb_recall,
-    "q238_html_parse": q238_html_parse,
-    "q239_token_f1": q239_token_f1,
-    "q240_jpeg_progressive": q240_jpeg_progressive,
-    "q241_jpeg_progressive_rgb": q241_jpeg_progressive_rgb,
-    "q242_planted_near_dup_recall": q242_planted_near_dup_recall,
-    "q243_planted_near_dup_recall_mp": q243_planted_near_dup_recall_mp,
-    "q244_planted_snb_recall": q244_planted_snb_recall,
-    "q245_planted_minhash_recall": q245_planted_minhash_recall,
-    "q246_mp4_sps_params": q246_mp4_sps_params,
-    "q247_audio_frame_stats": q247_audio_frame_stats,
-    "q248_multipass_snb": q248_multipass_snb,
-    "q249_flac_streaminfo": q249_flac_streaminfo,
-    "q250_id3_tags": q250_id3_tags,
-    "q251_h264_idr_decode": q251_h264_idr_decode,
-    "q252_h264_pred_chain": q252_h264_pred_chain,
-    "q253_h264_i4x4": q253_h264_i4x4,
-    "q254_mp4_vui": q254_mp4_vui,
-    "q255_h264_multislice": q255_h264_multislice,
-    "q256_keyframe_dup_groups": q256_keyframe_dup_groups,
-    "q257_pdf_text": q257_pdf_text,
-    "q258_pdf_dup_pages": q258_pdf_dup_pages,
-    "q259_docx_text": q259_docx_text,
-    "q260_warc_records": q260_warc_records,
-    "q261_wet_text": q261_wet_text,
-    "q262_wet_curation": q262_wet_curation,
-    "q263_html_main_text": q263_html_main_text,
-    "q264_html_boilerplate_collapse": q264_html_boilerplate_collapse,
-    "q265_charset_sniff": q265_charset_sniff,
-    "q266_pdf_cid_text": q266_pdf_cid_text,
-    "q267_docx_parts": q267_docx_parts,
-    "q268_web_ingest_chain": q268_web_ingest_chain,
-    "q269_url_canonicalize": q269_url_canonicalize,
-    "q270_repeated_spans": q270_repeated_spans,
-    "q271_robots_rules": q271_robots_rules,
-    "q272_robots_allowed": q272_robots_allowed,
-    "q273_span_cut": q273_span_cut,
-    "q274_sentence_chunks": q274_sentence_chunks,
-    "q275_link_graph_edges": q275_link_graph_edges,
-    "q276_jsonld_metadata": q276_jsonld_metadata,
-    "q277_sitemap_entries": q277_sitemap_entries,
-    "q278_image_dhash": q278_image_dhash,
-    "q279_image_near_dup": q279_image_near_dup,
-    "q280_nfc_dedup": q280_nfc_dedup,
-    "q281_canonical_urls": q281_canonical_urls,
-    "q282_charset_declared": q282_charset_declared,
-    "q283_links_resolved": q283_links_resolved,
-    "q284_canonical_resolved": q284_canonical_resolved,
-    "q285_sitemap_gz_chase": q285_sitemap_gz_chase,
-    "q286_robots_wildcards": q286_robots_wildcards,
-    "q287_span_dedup_fixed_point": q287_span_dedup_fixed_point,
-    "q288_revisit_resolve": q288_revisit_resolve,
-    "q289_redirect_chains": q289_redirect_chains,
-    "q290_digest_check": q290_digest_check,
-    "q291_domain_rollup": q291_domain_rollup,
-    "q292_page_meta": q292_page_meta,
-    "q293_anchor_rollup": q293_anchor_rollup,
-    "q294_url_mixed_encoding_collapse": q294_url_mixed_encoding_collapse,
-    "q295_cdx_lookup_fetch": q295_cdx_lookup_fetch,
-    "q296_crawl_budget": q296_crawl_budget,
-    "q297_sitemap_extensions": q297_sitemap_extensions,
-    "q298_pdf_font_encodings": q298_pdf_font_encodings,
-    "q299_langid_audit": q299_langid_audit,
-    "q300_cdx_build_roundtrip": q300_cdx_build_roundtrip,
-    "q301_cdx_latest_capture": q301_cdx_latest_capture,
-    "q302_feed_entries": q302_feed_entries,
-    "q303_pdf_encrypted": q303_pdf_encrypted,
-    "q304_discovery_funnel": q304_discovery_funnel,
-    "q305_recrawl_schedule": q305_recrawl_schedule,
-    "q306_cdx_change_rate": q306_cdx_change_rate,
-    "q307_adaptive_recrawl": q307_adaptive_recrawl,
-    "q308_wat_catalog": q308_wat_catalog,
-    "q309_nb_quality_classifier": q309_nb_quality_classifier,
-    "q310_politeness_gate": q310_politeness_gate,
-    "q311_nb_train_apply": q311_nb_train_apply,
-    "q312_crawl_cycle": q312_crawl_cycle,
-}
-
 ORACLE_SQL: dict[str, str] = {
     "q01_pricing_summary": Q01_SQL,
     "q02_top_parts_by_avg_price": Q02_SQL,
@@ -18253,4 +17943,10 @@ ORACLE_SQL: dict[str, str] = {
     "q310_politeness_gate": Q310_SQL,
     "q311_nb_train_apply": Q311_SQL,
     "q312_crawl_cycle": Q312_SQL,
+}
+
+# Every key names its builder function, so the oracle table is the one
+# hand-written list and the builder registry follows it, in its order.
+SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    name: globals()[name] for name in ORACLE_SQL
 }

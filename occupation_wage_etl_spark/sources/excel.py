@@ -133,12 +133,30 @@ def from_pandas(spark: SparkSession, pdf) -> DataFrame:
     return spark.createDataFrame(pdf.where(pd.notna(pdf), None))
 
 
+def _dedup_header(header: list[str]) -> list[str]:
+    """Rename repeated names the way ``pandas.read_excel`` does: the
+    second ``x`` becomes ``x.1``, the third ``x.2``, skipping any name
+    already taken."""
+    seen: dict[str, int] = {}
+    out = []
+    for name in header:
+        n = seen.get(name, 0)
+        while n:
+            seen[name] = n + 1
+            name = f"{name}.{n}"
+            n = seen.get(name, 0)
+        seen[name] = 1
+        out.append(name)
+    return out
+
+
 def read_excel(spark: SparkSession, path: str, sheet_name: int | str = 0) -> DataFrame:
     """Read an Excel sheet into a DataFrame.
 
     Uses pandas/openpyxl when installed; otherwise the stdlib subset
     parser (sufficient for the reference's Skills.xlsx-style workbooks:
-    a header row + typed scalar cells).
+    a header row + typed scalar cells), with duplicate header names
+    renamed as pandas renames them.
     """
     import pandas as pd
 
@@ -146,5 +164,5 @@ def read_excel(spark: SparkSession, path: str, sheet_name: int | str = 0) -> Dat
         pdf = pd.read_excel(path, sheet_name=sheet_name, engine="openpyxl")
     except ImportError:
         header, rows = read_xlsx_stdlib(path, sheet_name)
-        pdf = pd.DataFrame(rows, columns=header)
+        pdf = pd.DataFrame(rows, columns=_dedup_header(header))
     return from_pandas(spark, pdf)

@@ -1,10 +1,9 @@
 """Multimodal operator tests: real header bytes, real mapInPandas plumbing.
 
-The decode step is stubbed (no codec libs in this container) — these tests
-pin down (a) the REAL magic-byte sniffer against genuine PNG/JPEG/GIF/WAV
-byte layouts built with struct.pack, (b) schemas/batch shapes/fan-out of
-every stubbed operator, (c) that strict mode raises loudly instead of
-silently faking."""
+These pin down (a) the REAL magic-byte sniffer against genuine PNG/JPEG/
+GIF/WAV byte layouts built with struct.pack, (b) the built-in image and
+audio decoders, and (c) the schemas, batch shapes and fan-out of every
+operator."""
 
 from __future__ import annotations
 
@@ -14,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from occupation_wage_etl_spark.operators import multimodal as M
+from occupation_wage_etl_spark.operators import video as V
 
 
 def png_bytes(width: int, height: int) -> bytes:
@@ -95,31 +95,35 @@ def test_sniff_metadata_df(assets):
     assert len(got) == 6
 
 
-def test_decode_strict_raises(assets):
-    with pytest.raises(Exception, match="codec libraries|NotImplementedError"):
-        M.decode_image(assets, mode="strict").collect()
-
-
-def test_decode_fake_deterministic(assets):
-    a = {r["doc_id"]: r["pixels"] for r in M.decode_image(assets, mode="fake").collect()}
-    b = {r["doc_id"]: r["pixels"] for r in M.decode_image(assets, mode="fake").collect()}
-    assert a == b
-    assert all(len(px) == 64 for px in a.values())
-    assert all(0 <= v <= 255 for v in a[1])
-
-
-def test_resize_shapes(assets):
-    out = M.resize_image(assets, 4, 3, mode="fake").collect()
-    assert all(len(r["content"]) == 12 for r in out)
+def test_resize_shapes(spark):
+    src = bytes((x * 7 + y * 11) % 256 for y in range(6) for x in range(8))
+    df = spark.createDataFrame(
+        [(i, M.encode_png_gray(8, 6, src)) for i in range(3)],
+        "doc_id long, content binary",
+    )
+    out = M.resize_image(df, 4, 3).collect()
+    assert len(out) == 3
     assert all((r["width"], r["height"]) == (4, 3) for r in out)
+    for r in out:
+        w, h, gray = M.decode_png_gray(bytes(r["content"]))
+        assert (w, h, len(gray)) == (4, 3, 12)
 
 
-def test_sample_frames_fanout(assets):
-    out = M.sample_frames(assets, every_nth=5, max_frames=3, mode="fake")
-    rows = out.collect()
-    assert len(rows) == 6 * 3
-    idxs = sorted({r["frame_idx"] for r in rows})
-    assert idxs == [0, 5, 10]
+def test_sample_frames_fanout(spark):
+    def mp4(n_frames: int) -> bytes:
+        return V.encode_mp4_fixture([{
+            "handler": "vide", "codec": "avc1", "timescale": 600,
+            "sample_delta": 100, "sizes": [16] * n_frames,
+            "sync": list(range(1, n_frames + 1)), "width": 64, "height": 48,
+        }])
+
+    df = spark.createDataFrame(
+        [(1, mp4(12)), (2, mp4(12)), (3, mp4(3))], "doc_id long, content binary"
+    )
+    rows = M.sample_frames(df, every_nth=5, max_frames=3).collect()
+    got = sorted((r["doc_id"], r["frame_idx"]) for r in rows)
+    # every 5th keyframe (1-based), at most 3 per video: rows out > rows in
+    assert got == [(1, 1), (1, 6), (1, 11), (2, 1), (2, 6), (2, 11), (3, 1)]
     assert all(len(r["frame"]) == 16 for r in rows)
 
 
@@ -262,7 +266,7 @@ def test_decode_image_real_spark(spark):
     df = spark.createDataFrame(
         [(i, b) for i, b, _ in rows], "doc_id long, content binary"
     )
-    got = {r["doc_id"]: r for r in M.decode_image(df, mode="real").collect()}
+    got = {r["doc_id"]: r for r in M.decode_image(df).collect()}
     for i, _, px in rows:
         assert (got[i]["width"], got[i]["height"]) == (8, 8)
         assert bytes(got[i]["pixels"]) == px
@@ -273,7 +277,7 @@ def test_decode_image_real_resamples_large(spark):
     df = spark.createDataFrame(
         [(1, M.encode_png_gray(16, 16, big))], "doc_id long, content binary"
     )
-    r = M.decode_image(df, mode="real", thumb=8).collect()[0]
+    r = M.decode_image(df, thumb=8).collect()[0]
     assert (r["width"], r["height"]) == (16, 16)  # source dims reported
     assert len(r["pixels"]) == 64
     # floor map hits even source indices: pixel(2x, 2y) = x + y*8
@@ -287,7 +291,7 @@ def test_decode_image_real_rejects_truncated_jpeg(spark):
         [(1, jpeg_bytes(10, 10))], "doc_id long, content binary"
     )
     with pytest.raises(Exception, match="truncated JPEG"):
-        M.decode_image(df, mode="real").collect()
+        M.decode_image(df).collect()
 
 
 def test_resize_image_real_reencodes_png(spark):
@@ -295,7 +299,7 @@ def test_resize_image_real_reencodes_png(spark):
     df = spark.createDataFrame(
         [(7, M.encode_png_gray(8, 8, src))], "doc_id long, content binary"
     )
-    r = M.resize_image(df, 4, 4, mode="real").collect()[0]
+    r = M.resize_image(df, 4, 4).collect()[0]
     w, h, gray = M.decode_png_gray(bytes(r["content"]))
     assert (w, h) == (4, 4)
     assert gray == M._nearest_resample(src, 8, 8, 4, 4)
@@ -349,7 +353,7 @@ def test_dhash64_bounds_and_wrap(spark):
     df2 = spark.createDataFrame(
         [(1, img), (2, img)], "doc_id long, content binary"
     )
-    dec = multimodal.decode_image(df2, mode="real", thumb=9)
+    dec = multimodal.decode_image(df2, thumb=9)
     hs = [
         r.h
         for r in dec.select(

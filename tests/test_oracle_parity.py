@@ -1,23 +1,21 @@
 """Local replica of the driver's correctness gate: run every Spark query
-and its DuckDB oracle on the same parquet, compare row counts, column
-names, and values (exact for non-floats, tight-tolerance for floats —
-stricter than the driver's hash in spirit: we also report max float
-deviation so bit-inexactness is caught before the driver sees it).
+and its DuckDB oracle on the same parquet and compare column names, row
+counts and values.  Values go through the project's one comparator,
+``tools/oracle_check._value_hash`` — columns sorted by name, rows
+sorted, floats by ``repr`` — so a float must match to the bit.
 """
 
 from __future__ import annotations
 
-import math
+import re
 
 import duckdb
 import pytest
 
-from occupation_wage_etl_spark.queries import ORACLE_SQL, SPARK_QUERIES
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+import __spark_entry__ as E
+from occupation_wage_etl_spark import queries
+from occupation_wage_etl_spark.queries import ORACLE_SQL, SPARK_QUERIES, TABLES
+from tools.oracle_check import _value_hash, canon_rows
 
 
 @pytest.fixture(scope="module")
@@ -29,17 +27,6 @@ def oracle(sf_tiny):
         )
     yield con
     con.close()
-
-
-def _canon(rows, columns):
-    """Sort columns by name, then rows; floats get exact bits preserved."""
-    idx = sorted(range(len(columns)), key=lambda i: columns[i])
-    out = []
-    for row in rows:
-        vals = tuple(row[i] for i in idx)
-        out.append(vals)
-    key = lambda r: tuple((v is None, str(type(v)), str(v)) for v in r)
-    return sorted(out, key=key), [columns[i] for i in idx]
 
 
 @pytest.mark.parametrize("name", sorted(ORACLE_SQL))
@@ -56,30 +43,20 @@ def test_query_matches_oracle(name, spark, sf_tiny, oracle):
     assert len(srows) == len(orows), (
         f"{name}: row count {len(srows)} vs oracle {len(orows)}"
     )
-
-    s_sorted, cols = _canon(srows, scols)
-    o_sorted, _ = _canon(orows, ocols)
-    max_float_dev = 0.0
-    for i, (sr, orow) in enumerate(zip(s_sorted, o_sorted)):
-        for c, (sv, ov) in zip(cols, zip(sr, orow)):
-            if isinstance(sv, float) and isinstance(ov, float):
-                if math.isnan(sv) and math.isnan(ov):
-                    continue
-                dev = abs(sv - ov)
-                max_float_dev = max(max_float_dev, dev)
-                assert sv == ov or dev < 1e-9, (
-                    f"{name} row {i} col {c}: {sv!r} != {ov!r}"
-                )
-            else:
-                assert sv == ov, f"{name} row {i} col {c}: {sv!r} != {ov!r}"
-    # bit-exactness report: queries designed to be exact should show 0.0
-    if max_float_dev:
-        print(f"{name}: max float deviation {max_float_dev:.3e}")
+    if _value_hash(srows, scols) != _value_hash(orows, ocols):
+        s, o = canon_rows(srows, scols), canon_rows(orows, ocols)
+        i = next(i for i, (a, b) in enumerate(zip(s, o)) if a != b)
+        pytest.fail(
+            f"{name} sorted row {i} over {sorted(scols)}: {s[i]} != oracle {o[i]}"
+        )
 
 
 def test_every_registry_query_is_oracle_paired():
-    """The registry's contract: every queries() entry carries an
-    oracle_sql() entry (the driver's strongest check).  If a future
-    query genuinely can't be SQL-expressed, add it to an explicit
-    allowlist here with a reason, don't silently drop the pairing."""
-    assert set(SPARK_QUERIES) == set(ORACLE_SQL)
+    """The module's q<N>_* builders, both registries and both driver
+    accessors name the same queries."""
+    builders = {
+        n for n, v in vars(queries).items()
+        if re.fullmatch(r"q\d+_\w+", n) and callable(v)
+    }
+    assert builders == set(SPARK_QUERIES) == set(ORACLE_SQL)
+    assert builders == set(E.queries()) == set(E.oracle_sql())

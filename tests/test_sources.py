@@ -172,6 +172,8 @@ def test_read_excel_end_to_end(spark, tmp_path):
     path = str(tmp_path / "skills.xlsx")
     _write_minimal_xlsx(path)
     df = excel.read_excel(spark, path)
+    # the repeated header is renamed as pandas.read_excel renames it
+    assert df.columns == ["soc_code", "element", "score", "soc_code.1"]
     rows = df.collect()
     assert len(rows) == 3
     got = {r[0]: (r[1], r[2]) for r in rows}

@@ -20,6 +20,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from occupation_wage_etl_spark.operators._cache import release_all  # noqa: E402
 from occupation_wage_etl_spark.queries import SPARK_QUERIES  # noqa: E402
 from occupation_wage_etl_spark.session import get_spark  # noqa: E402
 
@@ -52,13 +53,7 @@ def main() -> int:
             f.write(f"# {name} — explain('formatted') @ {sf_dir} [{tag}]\n")
             f.write(buf.getvalue())
         print(f"wrote {path}")
-        from occupation_wage_etl_spark.operators._cache import (
-            release_cached,
-            release_checkpoints,
-        )
-        release_cached()
-        release_checkpoints(spark)
-        spark.catalog.clearCache()
+        release_all(spark)
     spark.stop()
     return 0
 

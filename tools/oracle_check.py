@@ -10,6 +10,10 @@ same parquet directory, then compares:
   floats are hashed via repr() so any cross-engine bit divergence shows
   up as a hash mismatch, exactly like the driver's gate.
 
+``canon_rows`` / ``_value_hash`` are the project's only definition of
+"matches the oracle": tests/test_oracle_parity.py, the verify skill's
+driver_sim.py and perfbench/ all compare through them.
+
 Usage:  python tools/oracle_check.py [sf_dir] [query ...]
 Prints one line per query and a JSON summary; exit 1 on any mismatch.
 """
@@ -25,11 +29,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 
 def _canon_cell(v):
     if v is None:
@@ -43,13 +42,18 @@ def _canon_cell(v):
     return str(v)
 
 
-def _value_hash(rows, columns):
+def canon_rows(rows, columns):
+    """The comparator's canonical form: columns sorted by name, every
+    cell rendered by ``_canon_cell`` (floats by ``repr``), rows sorted."""
     idx = sorted(range(len(columns)), key=lambda i: columns[i])
-    canon = sorted(
+    return sorted(
         tuple(_canon_cell(row[i]) for i in idx) for row in rows
     )
+
+
+def _value_hash(rows, columns):
     h = hashlib.sha256()
-    for row in canon:
+    for row in canon_rows(rows, columns):
         h.update("\x1f".join(row).encode())
         h.update(b"\x1e")
     return h.hexdigest()
@@ -58,13 +62,9 @@ def _value_hash(rows, columns):
 def main() -> int:
     import duckdb
 
-    from occupation_wage_etl_spark.queries import ORACLE_SQL, SPARK_QUERIES
+    from occupation_wage_etl_spark.operators._cache import release_all
+    from occupation_wage_etl_spark.queries import ORACLE_SQL, SPARK_QUERIES, TABLES
     from occupation_wage_etl_spark.session import get_spark
-
-    from occupation_wage_etl_spark.operators._cache import (
-        release_cached,
-        release_checkpoints,
-    )
 
     argv = list(sys.argv[1:])
     json_out = None
@@ -95,29 +95,22 @@ def main() -> int:
             sdf = SPARK_QUERIES[name](spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
-            if name not in ORACLE_SQL:
-                entry["err"] = "no_oracle"
-                entry["spark_rows"] = len(srows)
-            else:
-                cur = con.execute(ORACLE_SQL[name])
-                ocols = [d[0] for d in cur.description]
-                orows = [tuple(r) for r in cur.fetchall()]
-                entry["rows_match"] = len(srows) == len(orows)
-                entry["schema_match"] = sorted(scols) == sorted(ocols)
-                entry["hash_match"] = (
-                    entry["rows_match"] and entry["schema_match"]
-                    and _value_hash(srows, scols) == _value_hash(orows, ocols)
-                )
-                entry["spark_rows"] = len(srows)
-                entry["oracle_rows"] = len(orows)
+            cur = con.execute(ORACLE_SQL[name])
+            ocols = [d[0] for d in cur.description]
+            orows = [tuple(r) for r in cur.fetchall()]
+            entry["rows_match"] = len(srows) == len(orows)
+            entry["schema_match"] = sorted(scols) == sorted(ocols)
+            entry["hash_match"] = (
+                entry["rows_match"] and entry["schema_match"]
+                and _value_hash(srows, scols) == _value_hash(orows, ocols)
+            )
+            entry["spark_rows"] = len(srows)
+            entry["oracle_rows"] = len(orows)
         except Exception as exc:  # noqa: BLE001
             entry["err"] = f"{type(exc).__name__}: {exc}"[:200]
-        release_cached()  # operator-internal persists die with the query
-        release_checkpoints(spark)  # and so do iterative localCheckpoints
+        release_all(spark)  # no query reads another one's cached blocks
         dt = time.time() - t0
-        ok = entry["hash_match"] is True or (
-            entry["err"] == "no_oracle" and entry.get("spark_rows", 0) >= 0
-        )
+        ok = entry["hash_match"] is True
         if not ok:
             bad.append(name)
         print(f"{'PASS' if ok else 'FAIL':4s} {name:32s} {dt:6.2f}s "

@@ -19,16 +19,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from occupation_wage_etl_spark.operators._cache import (  # noqa: E402
-    release_cached,
-    release_checkpoints,
-)
+import bench  # noqa: E402
+from occupation_wage_etl_spark.operators._cache import release_all  # noqa: E402
 from occupation_wage_etl_spark.queries import SPARK_QUERIES  # noqa: E402
 from occupation_wage_etl_spark.session import get_spark  # noqa: E402
-
-
-def force(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
 
 
 def main() -> int:
@@ -40,27 +34,21 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     if os.environ.get("SPARK_GRAFT_LAKE", "1") != "0":
-        import bench
-
         sf_dir, ingest = bench.ingest_lake(spark, sf_dir, cpus)
         print(f"lake ingest: {ingest:.3f}s -> {sf_dir}")
 
     for name in names:
         fn = SPARK_QUERIES[name]
         spark.sparkContext.setJobDescription(f"{name}: warmup")
-        force(fn(spark, sf_dir))  # untimed: codegen + worker spin-up
-        release_cached()
-        release_checkpoints(spark)
-        spark.catalog.clearCache()
+        bench.force(fn(spark, sf_dir))  # untimed: codegen + worker spin-up
+        release_all(spark)
         samples = []
         for i in range(n_samples):
             spark.sparkContext.setJobDescription(f"{name}: timed {i}")
             t0 = time.perf_counter()
-            force(fn(spark, sf_dir))
+            bench.force(fn(spark, sf_dir))
             samples.append(time.perf_counter() - t0)
-            release_cached()
-            release_checkpoints(spark)
-            spark.catalog.clearCache()
+            release_all(spark)
         print(
             f"{name}: min={min(samples):.3f}s "
             f"samples={[round(s, 3) for s in samples]}"

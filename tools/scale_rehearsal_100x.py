@@ -209,10 +209,7 @@ def build(spark) -> None:
 
 
 def main() -> int:
-    from occupation_wage_etl_spark.operators._cache import (
-        release_cached,
-        release_checkpoints,
-    )
+    from occupation_wage_etl_spark.operators._cache import release_all
     from occupation_wage_etl_spark.queries import SPARK_QUERIES
     from occupation_wage_etl_spark.session import get_spark
     import tools.scale_rehearsal as r10
@@ -240,9 +237,7 @@ def main() -> int:
             t0 = time.time()
             n = SPARK_QUERIES[name](spark, d).count()
             per[label] = (time.time() - t0, n)
-            release_cached()
-            release_checkpoints(spark)
-            spark.catalog.clearCache()
+            release_all(spark)
             # shuffle files outlive their stages until the JVM
             # ContextCleaner GCs the RDDs; at 100x one session's
             # accumulated spill fills the disk (observed: ENOSPC after
