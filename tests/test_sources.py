@@ -4,8 +4,11 @@ idempotent warehouse append."""
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 import pytest
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from occupation_wage_etl_spark.sources import excel, html_table, lake, warehouse
@@ -75,44 +78,57 @@ def test_excel_from_pandas_null_normalization(spark):
     assert nulls == 1
 
 
-def _write_minimal_xlsx(path) -> None:
-    """Hand-built ECMA-376 workbook (zip of XML parts): header row + three
-    data rows mixing shared strings, rich-text runs, inline strings,
-    ints, floats, booleans, and a skipped (sparse) cell."""
+_MAIN_NS = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+
+
+def _write_xlsx(path, sheet: str, shared: str | None = None) -> None:
+    """Write an ECMA-376 package (zip of XML parts) around one worksheet
+    named "Skills" and, if given, a shared-string table."""
     import zipfile
 
-    content_types = (
-        '<?xml version="1.0"?>'
-        '<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">'
-        '<Default Extension="xml" ContentType="application/xml"/>'
-        '<Override PartName="/xl/workbook.xml" ContentType="application/vnd.'
-        'openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>'
-        '<Override PartName="/xl/worksheets/sheet1.xml" ContentType="application/'
-        'vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>'
-        '<Override PartName="/xl/sharedStrings.xml" ContentType="application/vnd.'
-        'openxmlformats-officedocument.spreadsheetml.sharedStrings+xml"/>'
-        "</Types>"
-    )
-    root_rels = (
-        '<?xml version="1.0"?>'
-        '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
-        '<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/'
-        'officeDocument/2006/relationships/officeDocument" Target="xl/workbook.xml"/>'
-        "</Relationships>"
-    )
-    workbook = (
-        '<?xml version="1.0"?>'
-        '<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" '
-        'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">'
-        '<sheets><sheet name="Skills" sheetId="1" r:id="rId1"/></sheets></workbook>'
-    )
-    wb_rels = (
-        '<?xml version="1.0"?>'
-        '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
-        '<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/'
-        'officeDocument/2006/relationships/worksheet" Target="worksheets/sheet1.xml"/>'
-        "</Relationships>"
-    )
+    rel_ns = "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
+    pkg_ns = "http://schemas.openxmlformats.org/package/2006/relationships"
+    parts = {
+        "[Content_Types].xml": (
+            '<?xml version="1.0"?>'
+            '<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">'
+            '<Default Extension="xml" ContentType="application/xml"/>'
+            '<Override PartName="/xl/workbook.xml" ContentType="application/vnd.'
+            'openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>'
+            '<Override PartName="/xl/worksheets/sheet1.xml" ContentType="application/'
+            'vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>'
+            + ('<Override PartName="/xl/sharedStrings.xml" ContentType="application/vnd.'
+               'openxmlformats-officedocument.spreadsheetml.sharedStrings+xml"/>'
+               if shared is not None else "")
+            + "</Types>"
+        ),
+        "_rels/.rels": (
+            f'<?xml version="1.0"?><Relationships xmlns="{pkg_ns}">'
+            f'<Relationship Id="rId1" Type="{rel_ns}/officeDocument" Target="xl/workbook.xml"/>'
+            "</Relationships>"
+        ),
+        "xl/workbook.xml": (
+            f'<?xml version="1.0"?><workbook xmlns="{_MAIN_NS}" xmlns:r="{rel_ns}">'
+            '<sheets><sheet name="Skills" sheetId="1" r:id="rId1"/></sheets></workbook>'
+        ),
+        "xl/_rels/workbook.xml.rels": (
+            f'<?xml version="1.0"?><Relationships xmlns="{pkg_ns}">'
+            f'<Relationship Id="rId1" Type="{rel_ns}/worksheet" Target="worksheets/sheet1.xml"/>'
+            "</Relationships>"
+        ),
+        "xl/worksheets/sheet1.xml": sheet,
+    }
+    if shared is not None:
+        parts["xl/sharedStrings.xml"] = shared
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, text in parts.items():
+            zf.writestr(name, text)
+
+
+def _write_minimal_xlsx(path) -> None:
+    """Hand-built workbook: header row + three data rows mixing shared
+    strings, rich-text runs, inline strings, ints, floats, booleans, and
+    a skipped (sparse) cell."""
     shared = (
         '<?xml version="1.0"?>'
         '<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" count="4" uniqueCount="4">'
@@ -142,13 +158,7 @@ def _write_minimal_xlsx(path) -> None:
         "</row>"
         "</sheetData></worksheet>"
     )
-    with zipfile.ZipFile(path, "w") as zf:
-        zf.writestr("[Content_Types].xml", content_types)
-        zf.writestr("_rels/.rels", root_rels)
-        zf.writestr("xl/workbook.xml", workbook)
-        zf.writestr("xl/_rels/workbook.xml.rels", wb_rels)
-        zf.writestr("xl/sharedStrings.xml", shared)
-        zf.writestr("xl/worksheets/sheet1.xml", sheet)
+    _write_xlsx(path, sheet, shared)
 
 
 def test_read_xlsx_stdlib_types_and_sparsity(tmp_path):
@@ -158,7 +168,7 @@ def test_read_xlsx_stdlib_types_and_sparsity(tmp_path):
     assert header == ["soc_code", "element", "score", "soc_code"]
     assert rows[0] == ["11-1011", "Critical Thinking", 4.12, True]
     assert rows[1] == ["13-2011", None, 3, None]  # sparse cells → NULL
-    assert rows[2] == ["11-1011", "", 2.5, False]
+    assert rows[2] == ["11-1011", None, 2.5, False]  # "" is a pandas NA string
     # sheet addressing: by name and a clear error otherwise
     assert excel.read_xlsx_stdlib(path, "Skills")[0] == header
     with pytest.raises(ValueError, match="not found"):
@@ -178,7 +188,188 @@ def test_read_excel_end_to_end(spark, tmp_path):
     assert len(rows) == 3
     got = {r[0]: (r[1], r[2]) for r in rows}
     assert got["13-2011"] == (None, 3)
-    assert got["11-1011"][0] in ("Critical Thinking", "")
+    assert got["11-1011"][0] in ("Critical Thinking", None)
+
+
+def _sheet_xml(rows: str, prefix: str = "", decl: str = '<?xml version="1.0"?>') -> str:
+    xmlns = f"xmlns:{prefix[:-1]}" if prefix else "xmlns"
+    return (f'{decl}<{prefix}worksheet {xmlns}="{_MAIN_NS}"><{prefix}sheetData>'
+            f"{rows}</{prefix}sheetData></{prefix}worksheet>")
+
+
+def test_read_xlsx_stdlib_error_cells(tmp_path):
+    """Error cells hold their error text, as openpyxl gives them; #N/A is
+    also a pandas NA string, so it is NULL in a data row (not in the
+    header)."""
+    path = str(tmp_path / "errors.xlsx")
+    _write_xlsx(path, _sheet_xml(
+        '<row><c r="A1" t="inlineStr"><is><t>ratio</t></is></c><c r="B1" t="e"><v>#N/A</v></c></row>'
+        '<row><c r="A2" t="e"><f>1/0</f><v>#DIV/0!</v></c><c r="B2" t="e"><v>#N/A</v></c></row>'
+        '<row><c r="A3" t="e"><v>#VALUE!</v></c><c r="B3"><v>1.5</v></c></row>'))
+    header, rows = excel.read_xlsx_stdlib(path)
+    assert header == ["ratio", "#N/A"]
+    assert rows == [["#DIV/0!", None], ["#VALUE!", 1.5]]
+
+
+def test_na_strings_are_the_pandas_defaults():
+    from pandas._libs.parsers import STR_NA_VALUES
+
+    assert excel.NA_STRINGS == STR_NA_VALUES
+
+
+@pytest.mark.parametrize("decl, rows, feature", [
+    ('<?xml version="1.0"?>', '<row><c r="A1" t="str"><v><![CDATA[a<b]]></v></c></row>', "CDATA"),
+    ('<?xml version="1.0" encoding="ISO-8859-1"?>', '<row><c r="A1"><v>1</v></c></row>', "encoding"),
+], ids=["cdata", "encoding"])
+def test_read_xlsx_stdlib_rejects_what_it_cannot_tokenize(tmp_path, decl, rows, feature):
+    path = str(tmp_path / "odd.xlsx")
+    _write_xlsx(path, _sheet_xml(rows, decl=decl))
+    with pytest.raises(ValueError, match=feature):
+        excel.read_xlsx_stdlib(path)
+
+
+def _reference_read(path: str) -> tuple[list[str], list[list]]:
+    """The ElementTree reader the tokenizer replaced, as the reference:
+    a DOM of the sheet, one ``find`` per cell.  Error cells, which it could
+    not read, are taken as their text, and pandas' NA strings in data
+    rows become None, so it follows the same rules."""
+    import xml.etree.ElementTree as ET
+    import zipfile
+
+    ns = f"{{{_MAIN_NS}}}"
+
+    def value(cell, strings):
+        ctype = cell.get("t", "n")
+        if ctype == "inlineStr":
+            is_el = cell.find(f"{ns}is")
+            if is_el is None:
+                return None
+            return "".join(t.text or "" for t in is_el.iter(f"{ns}t"))
+        v = cell.find(f"{ns}v")
+        if v is None or v.text is None:
+            return None
+        if ctype == "s":
+            return strings[int(v.text)]
+        if ctype in ("str", "e"):
+            return v.text
+        if ctype == "b":
+            return v.text == "1"
+        num = float(v.text)
+        return int(num) if num.is_integer() else num
+
+    with zipfile.ZipFile(path) as zf:
+        strings = excel._shared_strings(zf)
+        sheet = ET.fromstring(zf.read(excel._sheet_path(zf, 0)))
+        grid: list[list] = []
+        for row in sheet.iter(f"{ns}row"):
+            cells: dict[int, object] = {}
+            for c in row:
+                if c.tag != f"{ns}c":
+                    continue
+                m = re.match(r"([A-Z]+)(\d+)", c.get("r", ""))
+                idx = excel._col_index(m.group(1)) if m else len(cells)
+                cells[idx] = value(c, strings)
+            width = max(cells) + 1 if cells else 0
+            grid.append([cells.get(i) for i in range(width)])
+    if not grid:
+        return [], []
+    width = max(len(r) for r in grid)
+    grid = [r + [None] * (width - len(r)) for r in grid]
+    header = [str(h) if h is not None else f"col_{i}" for i, h in enumerate(grid[0])]
+    na = excel.NA_STRINGS
+    return header, [[None if isinstance(v, str) and v in na else v for v in r] for r in grid[1:]]
+
+
+# Raw XML character data: literal text, the five entities, character
+# references (one of them a kept CR), line ends an XML parser normalises,
+# and whole pandas NA strings.
+_XML_TEXT = st.one_of(
+    st.lists(st.sampled_from([
+        "a", "Z", " ", "7", "é", ">", '"', "'", "\t", "&amp;", "&lt;", "&gt;",
+        "&quot;", "&apos;", "&#65;", "&#x263A;", "&#13;", "\r\n", "\r", "\n",
+    ]), max_size=5).map("".join),
+    st.sampled_from(sorted(excel.NA_STRINGS)).map(
+        lambda s: s.replace("&", "&amp;").replace("<", "&lt;")),
+)
+_NUMBERS = st.one_of(
+    st.integers(-10**6, 10**6).map(str),
+    st.floats(allow_nan=False, allow_infinity=False, width=32).map(repr),
+    st.sampled_from(["1E-3", "3.0", "-0.5", "2.5e10", " 7 "]),
+)
+_FORMULA = st.sampled_from(["", "<f>A1&amp;B1</f>", '<f t="shared" si="0"/>'])
+
+
+def _text_runs(draw, p: str) -> str:
+    """A plain ``<t>`` (maybe ``xml:space="preserve"``) or rich runs."""
+    texts = draw(st.lists(_XML_TEXT, min_size=1, max_size=3))
+    space = draw(st.sampled_from(["", ' xml:space="preserve"']))
+    if len(texts) == 1 and draw(st.booleans()):
+        return f"<{p}t{space}>{texts[0]}</{p}t>"
+    return "".join(f"<{p}r><{p}rPr><{p}b/></{p}rPr><{p}t{space}>{t}</{p}t></{p}r>"
+                   for t in texts)
+
+
+@st.composite
+def _cell(draw, p: str, n_shared: int) -> str:
+    kind = draw(st.sampled_from(["n", "s", "str", "b", "e", "inlineStr", "empty"]))
+    children = {
+        "n": lambda: [draw(_FORMULA), f"<v>{draw(_NUMBERS)}</v>"],
+        "s": lambda: [f"<v>{draw(st.integers(0, n_shared - 1))}</v>"],
+        "str": lambda: [draw(_FORMULA), draw(st.sampled_from([f"<v>{draw(_XML_TEXT)}</v>", "<v/>"]))],
+        "b": lambda: [f"<v>{draw(st.sampled_from(['0', '1']))}</v>"],
+        "e": lambda: ["<f>1/0</f>", f"<v>{draw(st.sampled_from(['#N/A', '#DIV/0!', '#REF!']))}</v>"],
+        "inlineStr": lambda: [draw(st.sampled_from(["<is/>", f"<is>{_text_runs(draw, '')}</is>"]))],
+        "empty": lambda: [],
+    }[kind]()
+    indent = draw(st.sampled_from(["", "\n  "]))  # pretty-printed or not
+    content = "".join(indent + c for c in children if c)
+    content = (content + indent if content else "").replace("<", f"<{p}").replace(f"<{p}/", f"</{p}")
+    attrs = []
+    if draw(st.integers(0, 4)):  # most cells carry r=
+        col = draw(st.sampled_from(["A", "B", "C", "D", "AA"]))
+        attrs.append(("r", f"{col}{draw(st.integers(1, 9))}"))
+    if kind not in ("n", "empty") or draw(st.booleans()):
+        attrs.append(("t", "n" if kind == "empty" else kind))
+    if draw(st.booleans()):
+        attrs.append(("s", str(draw(st.integers(0, 9)))))
+    attrs = draw(st.permutations(attrs))
+    quotes = draw(st.lists(st.sampled_from(['"', "'"]), min_size=len(attrs), max_size=len(attrs)))
+    attr_xml = "".join(f" {k}={q}{v}{q}" for (k, v), q in zip(attrs, quotes))
+    if not content and draw(st.booleans()):
+        return f"<{p}c{attr_xml}/>"
+    return f"<{p}c{attr_xml}>{content}</{p}c>"
+
+
+@st.composite
+def _workbook(draw) -> tuple[str, str]:
+    """(worksheet XML, shared-string XML) of a random sheet."""
+    p = draw(st.sampled_from(["", "x:"]))
+    shared = [_text_runs(draw, "") for _ in range(draw(st.integers(1, 4)))]
+    rows = []
+    for r in range(1, draw(st.integers(0, 6)) + 1):
+        cells = draw(st.lists(_cell(p, len(shared)), max_size=5))
+        r_attr = draw(st.sampled_from(["", f' r="{r}"', f" r='{r}' spans=\"1:5\""]))
+        rows.append(f"<{p}row{r_attr}>{''.join(cells)}</{p}row>" if cells
+                    else f"<{p}row{r_attr}/>")
+    sst = (f'<sst xmlns="{_MAIN_NS}">'
+           + "".join(f"<si>{t}</si>" for t in shared) + "</sst>")
+    return _sheet_xml("".join(rows), prefix=p), sst
+
+
+@settings(max_examples=150, deadline=None, suppress_health_check=list(HealthCheck))
+@given(workbook=_workbook())
+@example(workbook=(_sheet_xml(  # a CR LF split across two runs is two line ends
+    '<row><c t="inlineStr"><is><t>h</t></is></c></row><row><c t="inlineStr">'
+    "<is><r><t>a\r</t></r><r><t>\nb</t></r></is></c></row>"), None))
+def test_read_xlsx_stdlib_matches_the_elementtree_reference(tmp_path_factory, workbook):
+    path = str(tmp_path_factory.mktemp("xlsx") / "random.xlsx")
+    _write_xlsx(path, *workbook)
+    header, rows = excel.read_xlsx_stdlib(path)
+    assert (header, rows) == _reference_read(path)
+    # the frame built from columns infers what a frame of the rows infers
+    pd.testing.assert_frame_equal(
+        excel._stdlib_frame(path),
+        pd.DataFrame(rows, columns=excel._dedup_header(header)), check_index_type=False)
 
 
 def test_lake_snapshot_idempotent_and_pruned(spark, tmp_path):
